@@ -30,7 +30,7 @@ import argparse
 import json
 import sys
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import SparkSession
 from pyspark.sql import functions as F
 
 
@@ -40,7 +40,8 @@ def _session() -> SparkSession:
     return build_session(app_name="genesapi-cli-spark")
 
 
-def _facts(spark: SparkSession, cube_path: str) -> DataFrame:
+def _facts(spark: SparkSession, cube_path: str) -> tuple:
+    """(layout, fact rows) of the cube at ``cube_path``; nothing runs yet."""
     from genesapi_cli_spark.sources.cube import parse_cube_file
 
     return parse_cube_file(spark, cube_path)
@@ -48,20 +49,12 @@ def _facts(spark: SparkSession, cube_path: str) -> DataFrame:
 
 def cmd_serialize(args: argparse.Namespace) -> int:
     spark = _session()
-    facts = _facts(spark, args.cube_path)
-    doc = F.struct(
-        F.col("region_id"),
-        F.col("statistic"),
-        F.col("year"),
-        F.col("measure"),
-        F.col("value"),
-        F.col("quality"),
-        F.col("dims"),
-    )
-    docs = facts.select(
-        F.sha2(F.to_json(doc), 256).alias("fact_id"),
-        F.to_json(doc).alias("doc"),
-    )
+    _layout, facts = _facts(spark, args.cube_path)
+    # fact_id is the sha256 of the document's JSON bytes (field order as
+    # listed), so equal facts get equal ids on every run.
+    docs = facts.selectExpr(
+        "to_json(struct(region_id, statistic, year, measure, value, quality, dims)) AS doc"
+    ).selectExpr("sha2(doc, 256) AS fact_id", "doc")
     # observe(): row count rides along the write job itself — no second
     # full scan/serialize just to print a number.
     from pyspark.sql import Observation
@@ -75,42 +68,30 @@ def cmd_serialize(args: argparse.Namespace) -> int:
 
 
 def cmd_schema(args: argparse.Namespace) -> int:
-    # The two collect()s below fetch the CATALOG, not the facts: one row per
-    # (statistic, measure[, dimension]) — bounded by the GENESIS schema
-    # surface (upstream: a few thousand statistics), never by fact volume;
-    # both relations are aggregates computed cluster-side first. The emitted
-    # artifact is one JSON document, so a driver materialization of the
-    # catalog is the contract here (same bound class as sources/layout.py's
-    # file manifests, which stay declarative precisely because file counts
-    # DO scale with data volume).
+    """One aggregate (``sources.cube.schema_rows``) and one collect over one
+    scan of the cube.
+
+    The collected rows are the CATALOG, not the facts: one row per
+    (statistic, measure) — bounded by the GENESIS schema surface (upstream:
+    a few thousand statistics), never by fact volume. The artifact is one
+    JSON document, so a driver materialization of the catalog is the
+    contract here.
+    """
+    from genesapi_cli_spark.sources.cube import schema_rows
+
     spark = _session()
-    facts = _facts(spark, args.cube_path)
-    dim_values = (
-        facts.select("statistic", "measure", F.explode("dims").alias("dim", "v"))
-        .groupBy("statistic", "measure", "dim")
-        .agg(F.sort_array(F.collect_set("v")).alias("values"))
-    )
-    coverage = facts.groupBy("statistic", "measure").agg(
-        F.count(F.lit(1)).alias("n_facts"),
-        F.countDistinct("region_id").alias("n_regions"),
-        F.min("year").alias("year_min"),
-        F.max("year").alias("year_max"),
-    )
+    layout, facts = _facts(spark, args.cube_path)
     schema = {
         "statistics": {},
     }
-    for row in coverage.collect():
+    for row in schema_rows(facts, layout).collect():
         schema["statistics"].setdefault(row.statistic, {"measures": {}})
         schema["statistics"][row.statistic]["measures"][row.measure] = {
             "n_facts": row.n_facts,
             "n_regions": row.n_regions,
             "years": [row.year_min, row.year_max],
-            "dimensions": {},
+            "dimensions": row.dim_domains,
         }
-    for row in dim_values.collect():
-        schema["statistics"][row.statistic]["measures"][row.measure]["dimensions"][
-            row.dim
-        ] = list(row.values)
     with open(args.out_json, "w") as fh:
         json.dump(schema, fh, indent=2, sort_keys=True)
     print(f"wrote schema for {len(schema['statistics'])} statistic(s) to {args.out_json}")

@@ -3264,13 +3264,16 @@ def q_agg_capture_recapture(spark: SparkSession, sf_dir: str) -> DataFrame:
     (ua = ∃ event with hv ≡ 0 mod 2, ub = ∃ with hv ≡ 0 mod 3 — max of the
     per-event predicates), and every output counter falls out of one
     single-row rollup over that relation: n_a = Σ ua, n_b = Σ ub,
-    m = Σ (ua ∧ ub), n_true = COUNT(*) (the per-user relation IS the
-    distinct-user set). Identical integers to the former four-arm plan
-    (two distinct-filtered sets + overlap join + countDistinct), which
-    scanned events twice, checkpointed an events-sized projection, and
-    fanned four jobs plus three broadcasts into the result row — now one
-    map-side-combined fact pass feeds two shrinking aggregates, no join,
-    no checkpoint, at any scale.
+    m = Σ (ua ∧ ub), n_true = COUNT(user_id) (the per-user relation IS
+    the distinct-user set). NULL user_id follows the oracle counter by
+    counter: ``SELECT DISTINCT`` keeps it as one row, so the NULL group
+    counts once in n_a and n_b; the overlap join and ``COUNT(DISTINCT)``
+    drop it, so m and n_true skip it. Identical integers to the former
+    four-arm plan (two distinct-filtered sets + overlap join +
+    countDistinct), which scanned events twice, checkpointed an
+    events-sized projection, and fanned four jobs plus three broadcasts
+    into the result row — now one map-side-combined fact pass feeds two
+    shrinking aggregates, no join, no checkpoint, at any scale.
     """
     ev = load(spark, sf_dir, "events")
     hv = F.conv(
@@ -3293,8 +3296,10 @@ def q_agg_capture_recapture(spark: SparkSession, sf_dir: str) -> DataFrame:
     return per_user.agg(
         F.sum("ua").cast("bigint").alias("n_a"),
         F.sum("ub").cast("bigint").alias("n_b"),
-        F.sum(F.col("ua") * F.col("ub")).cast("bigint").alias("m"),
-        F.count(F.lit(1)).cast("bigint").alias("n_true"),
+        F.sum(F.when(F.col("user_id").isNotNull(), F.col("ua") * F.col("ub")))
+        .cast("bigint")
+        .alias("m"),
+        F.count("user_id").cast("bigint").alias("n_true"),
     ).select(
         "n_a",
         "n_b",

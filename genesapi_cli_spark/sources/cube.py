@@ -8,12 +8,15 @@ The format is publicly documented by Destatis; the grammar here follows
 /root/repo/FIXTURES.md §3 (the reference mount was empty — see SURVEY.md §0).
 
 Spark-first design (NOT a port of the row loop):
-- header records are metadata — tiny, parsed driver-side into an axis/measure
-  layout (exactly like reading a Parquet footer);
+- header records are metadata — tiny, read on the driver through the Hadoop
+  FileSystem API up to the first fact record and parsed into an
+  axis/measure layout (exactly like reading a Parquet footer; no Spark job);
 - fact records are data — parsed executor-side with JVM ``split``/``element_at``
-  expressions generated FROM that layout, so a 100 TB cube dump parses as an
-  ordinary projected scan with whole-stage codegen; dimensions land in a
-  MAP<STRING,STRING> column (Dremel-style nested columnar, PAPERS.md).
+  expressions generated FROM that layout, so a 100 TB cube dump parses as ONE
+  projected scan with whole-stage codegen: each record is split once and one
+  ``inline`` generator unpivots its measure groups into fact rows;
+  dimensions land in a MAP<STRING,STRING> column (Dremel-style nested
+  columnar, PAPERS.md).
 - confidential/missing tokens (``...``, ``-``, ``x``, ``.``) become NULL with
   the quality flag preserved — the reference's value-cleaning semantics.
 """
@@ -71,63 +74,72 @@ def parse_header(lines: list[str]) -> CubeLayout:
     return layout
 
 
+def _sql_str(text: str) -> str:
+    """``text`` as a Spark SQL string literal. Header values come from the
+    input file, so quotes and backslashes are escaped, never trusted."""
+    return "'" + text.replace("\\", "\\\\").replace("'", "\\'") + "'"
+
+
 def parse_cube_lines(spark: SparkSession, lines_df: DataFrame, layout: CubeLayout) -> DataFrame:
-    """Executor-side fact parse: D;QEI rows → typed fact rows.
+    """Executor-side fact parse: D;QEI rows → typed fact rows, in one scan.
 
     Field layout per QEI record (after `D;QEI`): one code per axis (the first
     axis is the regional axis → region_id, the rest are dimension members),
     then the time value, then per-measure groups of (value, quality, lock).
-    """
-    n_axes = len(layout.axes)
-    facts = lines_df.filter(F.col("value").startswith("D;QEI;")).select(
-        F.split(F.col("value"), ";").alias("f")
-    )
-    # positions are 1-based for element_at; fields 1,2 are "D","QEI"
-    region = F.element_at("f", 3)
-    dim_entries = [
-        (layout.axes[i], F.element_at("f", 3 + i)) for i in range(1, n_axes)
-    ]
-    time_pos = 3 + n_axes
-    year = F.element_at("f", time_pos).cast("int")
 
-    rows = []
-    for m_idx, (m_name, _unit, _vtype) in enumerate(layout.measures):
-        base = time_pos + 1 + m_idx * 3
-        raw_value = F.element_at("f", base)
-        quality = F.element_at("f", base + 1)
-        value = F.when(raw_value.isin(*NA_TOKENS), F.lit(None)).otherwise(
-            F.replace(raw_value, F.lit(","), F.lit(".")).cast("double")
+    Each record is ``split`` once; the per-measure groups unpivot through
+    one ``inline`` generator over an array of (measure, raw value, quality)
+    structs, so every input split is read once whatever the measure count.
+    The projection is generated as SQL text from the layout: one plan call
+    per column instead of one per expression node, which keeps plan
+    construction cheap for wide layouts.
+    """
+    # positions are 1-based for element_at; fields 1,2 are "D","QEI"
+    time_pos = 3 + len(layout.axes)
+    dim_axes = layout.axes[1:]
+    keys = ", ".join(_sql_str(a) for a in dim_axes)
+    members = ", ".join(f"element_at(f, {4 + i})" for i in range(len(dim_axes)))
+    dims = (
+        f"map_from_arrays(array({keys}), array({members}))"
+        if dim_axes
+        else "CAST(map() AS map<string,string>)"
+    )
+    groups = ", ".join(
+        f"named_struct('measure', {_sql_str(name)}, "
+        f"'raw_value', element_at(f, {time_pos + 1 + 3 * i}), "
+        f"'quality', element_at(f, {time_pos + 2 + 3 * i}))"
+        for i, (name, _unit, _vtype) in enumerate(layout.measures)
+    )
+    na_tokens = ", ".join(_sql_str(t) for t in NA_TOKENS)
+    return (
+        lines_df.where("startswith(value, 'D;QEI;')")
+        .selectExpr("split(value, ';') AS f")
+        .selectExpr(
+            "element_at(f, 3) AS region_id",
+            f"{_sql_str(layout.statistic)} AS statistic",
+            f"{_sql_str(layout.cube)} AS cube",
+            f"CAST(element_at(f, {time_pos}) AS INT) AS year",
+            f"inline(array({groups}))",
+            f"{dims} AS dims",
         )
-        dims = (
-            F.map_from_arrays(
-                F.array(*[F.lit(k) for k, _ in dim_entries]),
-                F.array(*[v for _, v in dim_entries]),
-            )
-            if dim_entries
-            else F.map_from_arrays(F.array().cast("array<string>"), F.array().cast("array<string>"))
+        .selectExpr(
+            "region_id",
+            "statistic",
+            "cube",
+            "year",
+            "measure",
+            f"CASE WHEN raw_value IN ({na_tokens}) THEN NULL"
+            " ELSE CAST(replace(raw_value, ',', '.') AS DOUBLE) END AS value",
+            "quality",
+            "dims",
         )
-        rows.append(
-            facts.select(
-                region.alias("region_id"),
-                F.lit(layout.statistic).alias("statistic"),
-                F.lit(layout.cube).alias("cube"),
-                year.alias("year"),
-                F.lit(m_name).alias("measure"),
-                value.alias("value"),
-                quality.alias("quality"),
-                dims.alias("dims"),
-            )
-        )
-    out = rows[0]
-    for r in rows[1:]:
-        out = out.unionByName(r)
-    return out
+    )
 
 
 def parse_cube_text(spark: SparkSession, text: str) -> DataFrame:
     """Parse a complete cube export given as text (fixture / small-file path).
-    For lake-scale inputs, read header lines with ``spark.read.text(...).limit``
-    and feed the body through the same ``parse_cube_lines``."""
+    For files of any size, :func:`parse_cube_file` reads the header on the
+    driver and feeds the body through the same ``parse_cube_lines``."""
     lines = [ln for ln in text.strip().splitlines() if ln.strip()]
     header = [ln for ln in lines if not ln.startswith("D;QEI;")]
     layout = parse_header(header)
@@ -201,6 +213,34 @@ SELECT * FROM (VALUES
 """
 
 
+def schema_rows(facts: DataFrame, layout: CubeLayout) -> DataFrame:
+    """The per-(statistic, measure) catalog of one cube's facts, in ONE
+    aggregate over one scan: fact/value counts, region count, year range and
+    ``dim_domains`` — a map from each dimension axis of ``layout`` to the
+    sorted set of its observed members.
+
+    Each group holds its distinct region ids while it aggregates; they are
+    bounded by the AGS key space (a few ten thousand regional codes), the
+    same bound class as the dimension domains the catalog collects anyway.
+    """
+    axes = sorted(layout.axes[1:])
+    keys = ", ".join(_sql_str(a) for a in axes)
+    values = ", ".join(f"sort_array(collect_set(dims[{_sql_str(a)}]))" for a in axes)
+    domains = (
+        f"map_from_arrays(array({keys}), array({values}))"
+        if axes
+        else "CAST(map() AS map<string,array<string>>)"
+    )
+    return facts.groupBy("statistic", "measure").agg(
+        F.expr("count(1) AS n_facts"),
+        F.expr("count(value) AS n_values"),
+        F.expr("CAST(size(collect_set(region_id)) AS BIGINT) AS n_regions"),
+        F.expr("min(year) AS year_min"),
+        F.expr("max(year) AS year_max"),
+        F.expr(f"{domains} AS dim_domains"),
+    )
+
+
 @register("q_genesis_schema", oracle=_SCHEMA_ORACLE)
 def q_genesis_schema(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Catalog/schema build (``genesapi/schema.py`` upstream): aggregate the
@@ -208,31 +248,10 @@ def q_genesis_schema(spark: SparkSession, sf_dir: str) -> DataFrame:
     layer would expose — fact/region/year coverage plus the observed value
     set of every dimension. Deterministic sample → VALUES oracle.
 
-    Plan shape: explode the dims map once, then two small aggregations —
-    exactly the metadata-derivation pass the reference runs across all cubes,
-    here as one shuffle keyed by (statistic, measure)."""
-    facts = parse_cube_text(spark, SAMPLE_CUBE_TEXT)
-    dim_values = (
-        facts.select(
-            "statistic", "measure", F.explode("dims").alias("dim", "dim_value")
-        )
-        .groupBy("statistic", "measure", "dim")
-        .agg(F.sort_array(F.collect_set("dim_value")).alias("values"))
-        .groupBy("statistic", "measure")
-        .agg(
-            F.map_from_entries(
-                F.sort_array(F.collect_list(F.struct("dim", "values")))
-            ).alias("dim_domains")
-        )
-    )
-    coverage = facts.groupBy("statistic", "measure").agg(
-        F.count(F.lit(1)).alias("n_facts"),
-        F.count("value").alias("n_values"),
-        F.countDistinct("region_id").alias("n_regions"),
-        F.min("year").alias("year_min"),
-        F.max("year").alias("year_max"),
-    )
-    return coverage.join(dim_values, ["statistic", "measure"]).select(
+    Plan shape: :func:`schema_rows`, the same single aggregation ``cli
+    schema`` runs — one shuffle keyed by (statistic, measure)."""
+    layout = parse_header(SAMPLE_CUBE_TEXT.splitlines())
+    return schema_rows(parse_cube_text(spark, SAMPLE_CUBE_TEXT), layout).select(
         "statistic",
         "measure",
         "n_facts",
@@ -272,21 +291,50 @@ def q_genesis_region_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def parse_cube_file(spark: SparkSession, path: str) -> DataFrame:
-    """Parse a cube export FILE (or glob/directory of one cube's files).
+def read_cube_header(spark: SparkSession, body: DataFrame) -> CubeLayout:
+    """Read the layout of the cube whose text ``body`` (a
+    ``spark.read.text`` relation) holds, on the driver, without a Spark job.
 
-    Header records are O(10) lines — read driver-side (the parquet-footer
-    analog); the fact body streams through ``spark.read.text`` so a
-    lake-scale dump parses as an ordinary projected scan: the D;QEI filter
-    and the split/element_at projection run executor-side with whole-stage
-    codegen, and input splitting gives per-file/least-per-block parallelism.
+    Opens the first of the relation's input files by path order through the
+    Hadoop FileSystem API — so every scheme Spark reads (file:, hdfs:,
+    s3a:, ...) and every compression codec it decodes works — and stops at
+    the first ``D;QEI;`` record. Like a Parquet footer read, the cost is a
+    dozen lines, independent of the cube's size.
+    """
+    files = sorted(body.inputFiles())
+    if not files:
+        raise FileNotFoundError("cube relation has no input file")
+    jvm = spark.sparkContext._jvm
+    conf = spark.sparkContext._jsc.hadoopConfiguration()
+    first = jvm.org.apache.hadoop.fs.Path(files[0])
+    codec = jvm.org.apache.hadoop.io.compress.CompressionCodecFactory(conf).getCodec(first)
+    stream = first.getFileSystem(conf).open(first)
+    header = []
+    try:
+        if codec is not None:
+            stream = codec.createInputStream(stream)
+        reader = jvm.java.io.BufferedReader(jvm.java.io.InputStreamReader(stream, "UTF-8"))
+        while (line := reader.readLine()) is not None and not line.startswith("D;QEI;"):
+            header.append(line)
+    finally:
+        stream.close()
+    return parse_header(header)
+
+
+def parse_cube_file(spark: SparkSession, path: str) -> tuple[CubeLayout, DataFrame]:
+    """Parse a cube export FILE (or glob/directory of one cube's files) into
+    its layout and its fact rows.
+
+    The header is read on the driver by :func:`read_cube_header` (no Spark
+    job); the fact body streams through ``spark.read.text`` so a lake-scale
+    dump parses as one projected scan: the D;QEI filter, the split and the
+    measure unpivot run executor-side with whole-stage codegen, and input
+    splitting gives per-file/per-block parallelism. Nothing runs until the
+    caller's action.
     """
     body = spark.read.text(path)
-    header_rows = (
-        body.filter(~F.col("value").startswith("D;QEI;")).limit(200).collect()
-    )
-    layout = parse_header([r.value for r in header_rows])
-    return parse_cube_lines(spark, body, layout)
+    layout = read_cube_header(spark, body)
+    return layout, parse_cube_lines(spark, body, layout)
 
 
 # --- cube-text WRITER (the serialize direction) ------------------------------

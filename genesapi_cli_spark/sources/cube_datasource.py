@@ -37,7 +37,7 @@ CUBE_SCHEMA = (
 
 def _parse_fact_line(line: str, layout) -> list[tuple]:
     """One ``D;QEI`` record → one row per measure (same unpivot the JVM
-    path performs with its per-measure union)."""
+    path performs with its ``inline`` generator)."""
     parts = line.strip().split(";")
     # fields: D;QEI;<axis codes...>;<year>;<value;quality;lock per measure>
     n_axes = len(layout.axes)

@@ -37,6 +37,24 @@ def test_fact_rows(spark):
     assert r3.value is None and r3.quality == "x" and r3.dims == {"GES": "GESW"}
 
 
+
+def test_header_values_with_quotes_and_backslashes(spark):
+    """Header values are data from the file: a quote or backslash in a cube,
+    axis or measure name reaches the rows verbatim and never breaks the
+    generated parse."""
+    text = (
+        SAMPLE_CUBE_TEXT.replace("D;DQ;12411BJ001", "D;DQ;12'4\\BJ001")
+        .replace("D;DQA;GES;", "D;DQA;G'E\\S;")
+        .replace("D;DQI;BEVSTD;", "D;DQI;BEV'S\\TD\";")
+    )
+    rows = parse_cube_text(spark, text).collect()
+    assert len(rows) == 4
+    assert {(r.statistic, r.cube, r.measure) for r in rows} == {
+        ("12'4\\", "12'4\\BJ001", "BEV'S\\TD\"")
+    }
+    assert {tuple(r.dims) for r in rows} == {("G'E\\S",)}
+
+
 def test_decimal_comma_and_multi_measure(spark):
     text = """\
 K;DQ;X

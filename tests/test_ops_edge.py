@@ -179,3 +179,37 @@ def test_cdc_apply_delete_beats_update(spark):
             for r in q_cdc_apply(spark, d).collect()
         }
     assert out == {"O": (2, 130.0)}  # 10 + (20+100); key 20 deleted
+
+
+def test_capture_recapture_null_user_matches_oracle(spark, tmp_path):
+    """NULL user_id rows: the per-user fold must match the oracle SQL
+    counter by counter (n_a/n_b count the NULL group once, as SELECT
+    DISTINCT does; m and n_true drop it, as the join and COUNT(DISTINCT)
+    do), checked against DuckDB on the same events file."""
+    import duckdb
+
+    from genesapi_cli_spark.oracle import check_query
+    from genesapi_cli_spark.registry import REGISTRY
+
+    events = tmp_path / "events.parquet"
+    con = duckdb.connect()
+    con.sql(
+        f"COPY (SELECT event_id, ts, CASE WHEN event_id % 4 = 0 THEN NULL"
+        f" ELSE user_id END AS user_id, event_type, value, props"
+        f" FROM read_parquet('{SMOKE_SF_DIR}/events.parquet')"
+        f" WHERE event_id < 300) TO '{events}' (FORMAT parquet)"
+    )
+    con.sql(f"CREATE VIEW events AS SELECT * FROM read_parquet('{events}')")
+    # NULL-user events land in both samples, so counting the NULL group in
+    # m or n_true (or dropping it from n_a/n_b) would show
+    in_a, in_b = con.sql(
+        "WITH h AS (SELECT ('0x' || substr(sha256(CAST(event_id AS VARCHAR)"
+        " || '|cr'), 1, 8))::BIGINT AS hv FROM events WHERE user_id IS NULL)"
+        " SELECT bool_or(hv % 2 = 0), bool_or(hv % 3 = 0) FROM h"
+    ).fetchone()
+    assert in_a and in_b
+    try:
+        res = check_query(spark, REGISTRY["q_agg_capture_recapture"], str(tmp_path), con=con)
+    finally:
+        con.close()
+    assert res.ok, res.errors

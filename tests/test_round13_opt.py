@@ -9,7 +9,7 @@ import os
 import genesapi_cli_spark.io as gio
 from genesapi_cli_spark.io import derived_memo_get_or_build
 
-from tests.conftest import SMOKE_SF_DIR
+from tests.conftest import ORACLE_SF_DIR, SMOKE_SF_DIR
 
 
 def test_leaf_parallelism_derived_from_lake_size(spark, monkeypatch):
@@ -28,19 +28,23 @@ def test_leaf_parallelism_derived_from_lake_size(spark, monkeypatch):
         gio._ensure_scale_partitions(spark, sf_dir)
         return int(spark.conf.get(conf))
 
-    monkeypatch.delenv("SPARK_GRAFT_LEAF_PAR", raising=False)
-    assert run(17 << 20, "/tiny/lake") == 1, "tiny lake must not pad leaves"
-    assert run((64 << 20) * dp, "/big/lake") == dp, (
-        "data-sized lake must converge to the stock default (defaultParallelism)"
-    )
-    assert run(5 * (32 << 20), "/mid/lake") == min(5, dp)
+    try:
+        monkeypatch.delenv("SPARK_GRAFT_LEAF_PAR", raising=False)
+        assert run(17 << 20, "/tiny/lake") == 1, "tiny lake must not pad leaves"
+        assert run((64 << 20) * dp, "/big/lake") == dp, (
+            "data-sized lake must converge to the stock default (defaultParallelism)"
+        )
+        assert run(5 * (32 << 20), "/mid/lake") == min(5, dp)
 
-    monkeypatch.setenv("SPARK_GRAFT_LEAF_PAR", "7")
-    assert run(17 << 20, "/tiny/lake2") == 7, "env override must win"
-    monkeypatch.delenv("SPARK_GRAFT_LEAF_PAR")
-    # restore the real derivation for the shared session
-    gio._PART_MEMO.clear()
-    gio._PART_APPLIED.pop(app, None)
+        monkeypatch.setenv("SPARK_GRAFT_LEAF_PAR", "7")
+        assert run(17 << 20, "/tiny/lake2") == 7, "env override must win"
+    finally:
+        # re-derive from the real lake (real _lake_bytes, real env) so the
+        # shared session does not carry the override into later tests
+        monkeypatch.undo()
+        gio._PART_MEMO.clear()
+        gio._PART_APPLIED.pop(app, None)
+        gio._ensure_scale_partitions(spark, ORACLE_SF_DIR)
 
 
 def test_no_memo_knob_disables_cross_invocation_sharing(spark, monkeypatch):
