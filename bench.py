@@ -29,13 +29,8 @@ def materialize(df) -> None:
     df.write.format("noop").mode("overwrite").save()
 
 
-def main() -> int:
-    sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    m = re.search(r"sf([0-9.]+)", sf_dir)
-    sf = float(m.group(1)) if m else None
-    genesapi_cli_spark.load_all()
-
-    only = set(sys.argv[1:]) or None
+def build_bench_session(app_name: str = "genesapi-bench"):
+    """The bench session: the package session with bench's shuffle width."""
     # 8 shuffle partitions (not the package default 32): at bench scale
     # (sf≤0.1) every shuffle fits a handful of partitions and task-scheduling
     # overhead dominates — 32 partitions × ~300 stages is pure per-task tax.
@@ -65,17 +60,19 @@ def main() -> int:
     # across both contract core counts. Production: leave HIGH (AQE owns
     # coalescing; io._ensure_scale_partitions raises initialPartitionNum
     # with lake size on cluster masters).
-    spark = build_session(
-        app_name="genesapi-bench",
+    return build_session(
+        app_name=app_name,
         shuffle_partitions=int(os.environ.get("SPARK_GRAFT_SHUFFLE", "3")),
     )
 
-    # Engine warmup so the first measured query of each kind isn't charged
-    # one-time startup cost (data-independent infrastructure, not query
-    # results): JVM codegen templates for agg/window/explode/join, the
-    # parquet reader path, Arrow setup, and — the big one — the Python UDF
-    # worker pool, which the first pandas_udf/applyInPandas query otherwise
-    # pays ~1s to spawn.
+
+def warmup(spark, sf_dir: str) -> None:
+    """Engine warmup so the first measured query of each kind isn't charged
+    one-time startup cost (data-independent infrastructure, not query
+    results): JVM codegen templates for agg/window/explode/join, the
+    parquet reader path, Arrow setup, and — the big one — the Python UDF
+    worker pool, which the first pandas_udf/applyInPandas query otherwise
+    pays ~1s to spawn."""
     materialize(spark.range(1000).selectExpr("sum(id) AS s"))
     materialize(spark.createDataFrame([(1, "w")], "a int, b string"))
     spark.read.parquet(f"{sf_dir}/region.parquet").count()
@@ -100,6 +97,17 @@ def main() -> int:
             yield pdf
 
     materialize(warm.select("k", "id").mapInPandas(_warm_pandas, schema="k long, id long"))
+
+
+def main() -> int:
+    sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+    m = re.search(r"sf([0-9.]+)", sf_dir)
+    sf = float(m.group(1)) if m else None
+    genesapi_cli_spark.load_all()
+
+    only = set(sys.argv[1:]) or None
+    spark = build_bench_session()
+    warmup(spark, sf_dir)
 
     timings: dict[str, float] = {}
     total = 0.0

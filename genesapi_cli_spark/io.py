@@ -14,11 +14,13 @@ directory tree; nothing here assumes single-file inputs.
 from __future__ import annotations
 
 import os
+from collections.abc import Callable
 
+from py4j.protocol import Py4JError
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from genesapi_cli_spark.session import ensure_runtime_confs
+from genesapi_cli_spark.session import apply_confs, ensure_runtime_confs
 
 TABLES = (
     "region",
@@ -35,16 +37,85 @@ TABLES = (
 
 DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
-#: Session memo of loaded table DataFrames, keyed by (application, sf_dir,
-#: table, source mtime). DataFrames are immutable and the testdata lake is
-#: read-only, so re-analyzing the same parquet scan on every query invocation
-#: is pure Py4J/analysis tax (~0.13-0.16 s per load on this host — the bulk
-#: of the per-query invocation floor SCALE.md 6f decomposes). The mtime in
-#: the key makes a rewritten path (test fixtures) refresh instead of serving
-#: a stale plan; non-statable paths (object stores) memoize on path alone.
-#: The memo never crosses sessions (applicationId key) and holds one entry
-#: per table per sf_dir — O(10) per session.
-_LOAD_MEMO: dict = {}
+
+class _Entry:
+    __slots__ = ("stamp", "value", "checkpoint", "nparts")
+
+    def __init__(self, stamp: object, value: object, checkpoint: bool) -> None:
+        self.stamp, self.value, self.checkpoint, self.nparts = stamp, value, checkpoint, None
+
+    def release(self) -> None:
+        """Free the blocks a checkpointed value pins. ``DataFrame.unpersist``
+        only touches the cache manager; the lazy checkpoint's persisted RDD
+        is the leaf of the DataFrame's logical plan and is unpersisted
+        directly (best-effort: the session may already be stopped)."""
+        if self.checkpoint:
+            try:
+                self.value._jdf.queryExecution().logical().rdd().unpersist(False)
+            except Py4JError:  # pragma: no cover
+                pass
+
+
+class SessionCache:
+    """Every memo the engine keeps, for one Spark application at a time.
+
+    One entry per (kind, sf_dir): table loads (``load:<table>``), the lake
+    sizing, the shared derived relations, the constant tables (``sf_dir``
+    None). An entry remembers the source stamp it was built under; a call
+    with a new stamp rebuilds it and frees the stale one, and a call from a
+    new application drops every entry of the previous one. DataFrames are
+    immutable, so a hit skips the Py4J/analysis tax of re-planning the same
+    scan or re-deriving the same relation (SCALE.md 6f, §10).
+
+    ``checkpoint=True`` marks a shared derived relation: the built plan is
+    cut with a lazy ``localCheckpoint`` (materialized by its first
+    consumer's action), and ``SPARK_GRAFT_NO_MEMO=1`` turns off its reuse
+    across invocations — every call builds and checkpoints its own copy, so
+    the memo's share of a bench run is measurable by running it both ways.
+    Loads, sizing, constants and partition probes stay memoized."""
+
+    def __init__(self) -> None:
+        self.app: str | None = None
+        self.entries: dict[tuple, _Entry] = {}
+
+    def get_or_build(self, spark: SparkSession, kind: str, build: Callable[[], object],
+                     sf_dir: str | None = None, stamp: object = None,
+                     checkpoint: bool = False):
+        if checkpoint and os.environ.get("SPARK_GRAFT_NO_MEMO") == "1":
+            return build().localCheckpoint(eager=False)
+        app = spark.sparkContext.applicationId
+        if app != self.app:
+            self.clear()
+            self.app = app
+        key = (kind, sf_dir)
+        entry = self.entries.get(key)
+        if entry is not None and entry.stamp == stamp:
+            return entry.value
+        if entry is not None:
+            self.entries.pop(key).release()
+        value = build()
+        if checkpoint:
+            value = value.localCheckpoint(eager=False)
+        self.entries[key] = _Entry(stamp, value, checkpoint)
+        return value
+
+    def nparts(self, df: DataFrame) -> int:
+        """``df``'s partition count, probed once per cached value."""
+        entry = next((e for e in self.entries.values() if e.value is df), None)
+        if entry is None:
+            return df.rdd.getNumPartitions()
+        if entry.nparts is None:
+            entry.nparts = df.rdd.getNumPartitions()
+        return entry.nparts
+
+    def clear(self) -> None:
+        for entry in self.entries.values():
+            entry.release()
+        self.entries.clear()
+        self.app = None
+
+
+CACHE = SessionCache()
 
 
 def _src_stamp(path: str) -> object:
@@ -75,6 +146,13 @@ def _src_stamp(path: str) -> object:
             total_size += fst.st_size
             n_files += 1
     return (max_mtime, total_size, n_files)
+
+
+def source_stamps(sf_dir: str, *tables: str) -> tuple:
+    """The freshness stamps of ``tables`` under ``sf_dir`` — the key a
+    cached load or derived relation is built under, so a rewritten source
+    rebuilds every entry that reads it instead of serving frozen rows."""
+    return tuple(_src_stamp(f"{sf_dir}/{t}.parquet") for t in tables)
 
 
 #: Bytes of source parquet per INITIAL (pre-AQE-coalesce) shuffle partition.
@@ -127,12 +205,6 @@ _INITIAL_PART_CAP = 4096
 #: exactly the stock default. Override via SPARK_GRAFT_LEAF_PAR.
 _LEAF_PART_BYTES = 32 << 20
 
-#: (applicationId, sf_dir) -> computed initialPartitionNum; plus the last
-#: value actually applied per application so alternating sf_dirs in one
-#: session re-applies without re-walking the tree.
-_PART_MEMO: dict = {}
-_PART_APPLIED: dict = {}
-
 
 def _lake_bytes(spark: SparkSession, sf_dir: str) -> int:
     """Total bytes under ``sf_dir`` via the Hadoop FileSystem API — the
@@ -168,12 +240,14 @@ def _lake_bytes(spark: SparkSession, sf_dir: str) -> int:
 def _ensure_scale_partitions(spark: SparkSession, sf_dir: str) -> None:
     """Size partition-count knobs to the lake under ``sf_dir`` (∝ total
     parquet bytes via the Hadoop FileSystem listing). Driver-side metadata
-    only, memoized per (application, sf_dir, freshness stamp): the stamp is
-    ``_src_stamp`` for driver-visible paths — so a lake that GROWS
-    mid-session re-sizes, same contract as the load memo — plus the manual
-    bump knob ``spark.genesapi.lake.stamp`` for object-store lakes where a
-    per-load recursive remote listing would double metadata RPCs (bump
-    the knob after large ingests to force a re-size).
+    only, cached per sf_dir under a freshness stamp: ``_src_stamp`` for
+    driver-visible paths — so a lake that GROWS mid-session re-sizes, same
+    contract as the loads — plus the manual bump knob
+    ``spark.genesapi.lake.stamp`` for object-store lakes where a per-load
+    recursive remote listing would double metadata RPCs (bump the knob
+    after large ingests to force a re-size). The sized confs are applied
+    get-compare-set on every call, so one changed behind the engine's back
+    is restored by the next ``load``.
 
     Two knobs, both derived from the same listing:
 
@@ -190,24 +264,23 @@ def _ensure_scale_partitions(spark: SparkSession, sf_dir: str) -> None:
     try:
         sc = spark.sparkContext
         local = sc.master.startswith("local")
-        app = sc.applicationId
-        dp = sc.defaultParallelism
     except Exception:  # pragma: no cover - connect-mode sessions
         return
     try:
         manual = spark.conf.get("spark.genesapi.lake.stamp", "") or ""
     except Exception:  # pragma: no cover
         manual = ""
-    key = (app, sf_dir, _src_stamp(sf_dir), manual)
-    sizes = _PART_MEMO.get(key)
-    if sizes is None:
+
+    def size() -> tuple[int, int]:
         total = _lake_bytes(spark, sf_dir)
-        sizes = (
+        return (
             min(_INITIAL_PART_CAP, total // _INITIAL_PART_BYTES),
-            max(1, min(dp, total // _LEAF_PART_BYTES)),
+            max(1, min(sc.defaultParallelism, total // _LEAF_PART_BYTES)),
         )
-        _PART_MEMO[key] = sizes
-    n_bytes, leaf_n = sizes
+
+    n_bytes, leaf_n = CACHE.get_or_build(
+        spark, "sizing", size, sf_dir, (_src_stamp(sf_dir), manual)
+    )
     want: dict = {
         "spark.sql.leafNodeDefaultParallelism": os.environ.get(
             "SPARK_GRAFT_LEAF_PAR", str(leaf_n)
@@ -223,73 +296,7 @@ def _ensure_scale_partitions(spark: SparkSession, sf_dir: str) -> None:
         want["spark.sql.adaptive.coalescePartitions.initialPartitionNum"] = str(
             max(floor, n_bytes)
         )
-    if _PART_APPLIED.get(app) == want:
-        return
-    try:
-        for k, v in want.items():
-            spark.conf.set(k, v)
-        _PART_APPLIED[app] = want
-    except Exception:  # pragma: no cover - static-conf-locked exotic session
-        pass
-
-
-def derived_memo_key(spark: SparkSession, sf_dir: str, *tables: str) -> tuple:
-    """Memo key for session-memoized DERIVED relations (shared_ranked_cents,
-    shared_payload_frames, shared_copurchase_edges, …): (application,
-    sf_dir, source stamp per underlying table). ``_LOAD_MEMO`` keys on the
-    source mtime/size precisely so a rewritten path refreshes; a derived
-    memo keyed on (application, sf_dir) alone would keep serving frozen
-    rows after the dataset at that path is rewritten mid-session (test
-    fixtures, regenerated data). Including the same stamps here makes every
-    derived memo exactly as fresh as the loads it was built from."""
-    return (
-        spark.sparkContext.applicationId,
-        sf_dir,
-        tuple(_src_stamp(f"{sf_dir}/{t}.parquet") for t in tables),
-    )
-
-
-def evict_stale_derived(memo: dict, key: tuple) -> None:
-    """Drop memo entries superseded by ``key`` (same applicationId + sf_dir
-    prefix, different source stamp) before inserting the fresh one.
-
-    Without this, every source rewrite mid-session (test fixtures,
-    regenerated data) leaks one localCheckpoint'd DataFrame per shared
-    relation: the old key never matches again, but its checkpointed RDD
-    blocks stay pinned in block-manager memory for the session's lifetime.
-    Eviction unpersists the stale checkpoint eagerly (best-effort — an
-    un-materialized lazy checkpoint has nothing to free and unpersist is
-    a no-op there)."""
-    prefix = key[:2]
-    for k in [k for k in memo if k[:2] == prefix and k != key]:
-        stale = memo.pop(k)
-        try:
-            stale.unpersist()
-        except Exception:  # pragma: no cover - session already stopped
-            pass
-
-
-def derived_memo_get_or_build(memo: dict, key: tuple, build) -> DataFrame:
-    """The shared-relation memo protocol in one place: hit → return; miss →
-    evict same-(app, sf_dir) stale entries, build, lazily localCheckpoint
-    (plan-cut so dependent queries don't each re-derive the lineage), store.
-
-    ``SPARK_GRAFT_NO_MEMO=1`` disables the cross-invocation sharing: every
-    call builds its own relation (still lazily checkpointed, so a single
-    query's multi-consumer plan is unchanged — only the reuse BETWEEN query
-    invocations is gone). This is the round-13 de-shadowing knob: running
-    the full bench once each way quantifies exactly what the session memos
-    contribute to the suite total (SCALE.md §10), so the memo's effect is a
-    measured, subtractable number instead of a standing shadow.
-    """
-    if os.environ.get("SPARK_GRAFT_NO_MEMO") == "1":
-        return build().localCheckpoint(eager=False)
-    df = memo.get(key)
-    if df is None:
-        evict_stale_derived(memo, key)
-        df = build().localCheckpoint(eager=False)
-        memo[key] = df
-    return df
+    apply_confs(spark, want)
 
 
 def load(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
@@ -311,26 +318,22 @@ def load(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     """
     ensure_runtime_confs(spark)
     _ensure_scale_partitions(spark, sf_dir)
-    path = f"{sf_dir}/{name}.parquet"
-    key = (spark.sparkContext.applicationId, sf_dir, name, _src_stamp(path))
-    cached = _LOAD_MEMO.get(key)
-    if cached is not None:
-        return cached
-    df = spark.read.parquet(path)
-    if name == "events":
-        ts_type = dict(df.dtypes).get("ts", "")
-        if ts_type in ("bigint", "long"):
-            df = (
+
+    def read() -> DataFrame:
+        df = spark.read.parquet(f"{sf_dir}/{name}.parquet")
+        if name != "events":
+            return df
+        if dict(df.dtypes).get("ts", "") in ("bigint", "long"):
+            return (
                 df.withColumnRenamed("ts", "ts_ns")
                 .withColumn("ts_us", F.expr("ts_ns div 1000"))
                 .withColumn("ts", F.expr("timestamp_micros(ts_us)"))
             )
-        else:
-            df = df.withColumn(
-                "ts_us", F.unix_micros(F.col("ts").cast("timestamp"))
-            ).withColumn("ts_ns", F.col("ts_us") * F.lit(1000))
-    _LOAD_MEMO[key] = df
-    return df
+        return df.withColumn(
+            "ts_us", F.unix_micros(F.col("ts").cast("timestamp"))
+        ).withColumn("ts_ns", F.col("ts_us") * F.lit(1000))
+
+    return CACHE.get_or_build(spark, f"load:{name}", read, sf_dir, source_stamps(sf_dir, name))
 
 
 def load_tables(spark: SparkSession, sf_dir: str, *names: str) -> tuple[DataFrame, ...]:
@@ -366,19 +369,12 @@ def spread(df: DataFrame, *cols: str) -> DataFrame:
 
     The partition-count probe (``df.rdd.getNumPartitions()``) costs a full
     plan→RDD conversion (~0.15-0.19 s of Py4J/analysis per call on this
-    host), so the result is cached ON the DataFrame object: the memoized
-    ``load`` returns the same Python object per (session, sf_dir, table),
-    making every later spread of that table free. Transient inputs (already
-    transformed DataFrames) just re-probe — the attribute dies with them.
+    host), so ``CACHE`` keeps the count with a cached load: every later
+    spread of that table is free. Transient inputs (already transformed
+    DataFrames) just re-probe.
     """
     target = df.sparkSession.sparkContext.defaultParallelism
-    n = getattr(df, "_graft_nparts", None)
-    if n is None:
-        n = df.rdd.getNumPartitions()
-        try:
-            df._graft_nparts = n
-        except AttributeError:
-            pass
+    n = CACHE.nparts(df)
     if n >= target:
         return df
     return df.repartition(target, *cols) if cols else df.repartition(target)

@@ -22,10 +22,10 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from genesapi_cli_spark.io import (
-    derived_memo_get_or_build,
-    derived_memo_key,
+    CACHE,
     load,
     spread,
+    source_stamps,
 )
 from genesapi_cli_spark.registry import DEC, dec_avg, dec_sum, oracle_dec_avg, oracle_dec_sum, register
 
@@ -2213,18 +2213,15 @@ ORDER BY l_returnflag
 """
 
 
-#: Session memo of the rank-statistics family's common prefix: lineitem
-#: prices as exact cents, ranked per return flag with the group size and
-#: the quantity-weight cumulatives — (l_returnflag, cents, rk, n, qty,
-#: cum_qty, tot_qty); all five window columns ride ONE per-flag sort.
-#: Consumed by q_agg_trimmed, (twice, caps + clamp) q_agg_winsorized, and
-#: q_agg_weighted_median; the 600k-row per-group sort runs once per
-#: (session, sf_dir) instead of four times. At 100 TB this is the
-#: sorted/ranked projection a warehouse materializes once for its
-#: robust-statistics suite. Results identical with or without the memo.
-_RANKED_CENTS_MEMO: dict = {}
-
-
+# Session memo of the rank-statistics family's common prefix: lineitem
+# prices as exact cents, ranked per return flag with the group size and
+# the quantity-weight cumulatives — (l_returnflag, cents, rk, n, qty,
+# cum_qty, tot_qty); all five window columns ride ONE per-flag sort.
+# Consumed by q_agg_trimmed, (twice, caps + clamp) q_agg_winsorized, and
+# q_agg_weighted_median; the 600k-row per-group sort runs once per
+# (session, sf_dir) instead of four times. At 100 TB this is the
+# sorted/ranked projection a warehouse materializes once for its
+# robust-statistics suite. Results identical with or without the memo.
 def build_ranked_cents(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The UN-checkpointed ranked-cents plan — separate from the memoizing
     wrapper so the plan-snapshot gate can fingerprint the shared subtree
@@ -2252,9 +2249,9 @@ def build_ranked_cents(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def shared_ranked_cents(spark: SparkSession, sf_dir: str) -> DataFrame:
-    key = derived_memo_key(spark, sf_dir, "lineitem")
-    return derived_memo_get_or_build(
-        _RANKED_CENTS_MEMO, key, lambda: build_ranked_cents(spark, sf_dir)
+    return CACHE.get_or_build(
+        spark, "ranked_cents", lambda: build_ranked_cents(spark, sf_dir), sf_dir,
+        source_stamps(sf_dir, "lineitem"), checkpoint=True,
     )
 
 

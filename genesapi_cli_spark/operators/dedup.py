@@ -35,10 +35,10 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from genesapi_cli_spark.io import (
-    derived_memo_get_or_build,
-    derived_memo_key,
+    CACHE,
     load,
     spread,
+    source_stamps,
 )
 from genesapi_cli_spark.operators.similarity import as_double, dot_expr
 from genesapi_cli_spark.registry import register
@@ -1172,14 +1172,11 @@ def signatures_from_shingles(sh: DataFrame, *keys: str) -> DataFrame:
     )
 
 
-#: Session memo of the full-corpus portable band relation (the LSH index
-#: table): q_dedup_minhash_portable and q_dedup_incremental both index the
-#: whole documents table with the same band schema — first consumer
-#: materializes, later ones read cached blocks (persisted-index analog;
-#: same convention as graph.shared_copurchase_edges).
-_BANDS_MEMO: dict = {}
-
-
+# Session memo of the full-corpus portable band relation (the LSH index
+# table): q_dedup_minhash_portable and q_dedup_incremental both index the
+# whole documents table with the same band schema — first consumer
+# materializes, later ones read cached blocks (persisted-index analog;
+# same convention as graph.shared_copurchase_edges).
 def build_portable_bands(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The UN-checkpointed band plan — separate from the memoizing wrapper
     so the plan-snapshot gate fingerprints the shared subtree."""
@@ -1187,9 +1184,9 @@ def build_portable_bands(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def shared_portable_bands(spark: SparkSession, sf_dir: str) -> DataFrame:
-    key = derived_memo_key(spark, sf_dir, "documents")
-    return derived_memo_get_or_build(
-        _BANDS_MEMO, key, lambda: build_portable_bands(spark, sf_dir)
+    return CACHE.get_or_build(
+        spark, "portable_bands", lambda: build_portable_bands(spark, sf_dir), sf_dir,
+        source_stamps(sf_dir, "documents"), checkpoint=True,
     )
 
 

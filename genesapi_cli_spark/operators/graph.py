@@ -24,10 +24,10 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from genesapi_cli_spark.io import (
-    derived_memo_get_or_build,
-    derived_memo_key,
+    CACHE,
     load,
     spread,
+    source_stamps,
 )
 from genesapi_cli_spark.registry import register
 
@@ -77,18 +77,15 @@ def copurchase_edges(li: DataFrame) -> DataFrame:
     )
 
 
-#: Session-scoped memo of the materialized co-purchase edge relation, keyed
-#: by (Spark application, sf_dir). The graph family all consumes the SAME
-#: derived edge table; q_layout_edges certifies its persisted-lake form, and
-#: this memo is the runtime counterpart — the first graph query in a session
-#: pays the build (lazy localCheckpoint, materialized by that query's own
-#: action), every later one reads the cached blocks, exactly as production
-#: queries would read the persisted table instead of re-deriving it from
-#: 100 TB of lineitem. Results are identical with or without the memo; it
-#: never crosses sessions (applicationId key) or scale factors.
-_EDGE_MEMO: dict = {}
-
-
+# Session-scoped memo (io.CACHE) of the materialized co-purchase edge
+# relation. The graph family all consumes the SAME
+# derived edge table; q_layout_edges certifies its persisted-lake form, and
+# this memo is the runtime counterpart — the first graph query in a session
+# pays the build (lazy localCheckpoint, materialized by that query's own
+# action), every later one reads the cached blocks, exactly as production
+# queries would read the persisted table instead of re-deriving it from
+# 100 TB of lineitem. Results are identical with or without the memo; it
+# never crosses sessions or scale factors.
 def build_copurchase_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The UN-checkpointed edge plan — separate from the memoizing wrapper
     so the plan-snapshot gate fingerprints the shared subtree."""
@@ -96,9 +93,9 @@ def build_copurchase_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def shared_copurchase_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
-    key = derived_memo_key(spark, sf_dir, "lineitem")
-    return derived_memo_get_or_build(
-        _EDGE_MEMO, key, lambda: build_copurchase_edges(spark, sf_dir)
+    return CACHE.get_or_build(
+        spark, "copurchase_edges", lambda: build_copurchase_edges(spark, sf_dir), sf_dir,
+        source_stamps(sf_dir, "lineitem"), checkpoint=True,
     )
 
 

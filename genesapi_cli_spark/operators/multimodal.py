@@ -25,9 +25,9 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from genesapi_cli_spark.io import (
-    derived_memo_get_or_build,
-    derived_memo_key,
+    CACHE,
     load,
+    source_stamps,
 )
 from genesapi_cli_spark.registry import oracle_dec_avg, register
 
@@ -469,15 +469,12 @@ def _subframe_stats(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         )
 
 
-#: Session memo of the framed-payload relation (doc_id, lang, sub_idx,
-#: n_samples, bsum, sqsum), keyed by (application, sf_dir) — the multimodal
-#: family's common Arrow prefix (audio_energy, vad, shot_detect), the
-#: _NORMED_MEMO/_EDGE_MEMO pattern. At 100 TB this relation is precisely the
-#: persisted "frame features" table a media pipeline materializes once after
-#: decode; results are identical with or without the memo.
-_FRAMES_MEMO: dict = {}
-
-
+# Session memo of the framed-payload relation (doc_id, lang, sub_idx,
+# n_samples, bsum, sqsum), keyed by (application, sf_dir) — the multimodal
+# family's common Arrow prefix (audio_energy, vad, shot_detect), the
+# shared_normed_embeddings/shared_copurchase_edges pattern. At 100 TB this relation is precisely the
+# persisted "frame features" table a media pipeline materializes once after
+# decode; results are identical with or without the memo.
 def build_payload_frames(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The UN-checkpointed framing plan — separate from the memoizing
     wrapper so the plan-snapshot gate fingerprints the shared subtree."""
@@ -493,9 +490,9 @@ def build_payload_frames(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def shared_payload_frames(spark: SparkSession, sf_dir: str) -> DataFrame:
-    key = derived_memo_key(spark, sf_dir, "documents")
-    return derived_memo_get_or_build(
-        _FRAMES_MEMO, key, lambda: build_payload_frames(spark, sf_dir)
+    return CACHE.get_or_build(
+        spark, "payload_frames", lambda: build_payload_frames(spark, sf_dir), sf_dir,
+        source_stamps(sf_dir, "documents"), checkpoint=True,
     )
 
 
@@ -1475,10 +1472,6 @@ def _phash_cos_rows() -> list[tuple[int, int, int]]:
 
 _PHASH_COS = _phash_cos_rows()
 
-#: Session memo of the constant 240-row DCT basis table (createDataFrame
-#: costs ~0.15 s of driver serialization per call; the basis never changes).
-_PHASH_COS_MEMO: dict = {}
-
 
 def _phash_oracle() -> str:
     values = ",\n    ".join(f"({k}, {n}, {cq})" for k, n, cq in _PHASH_COS)
@@ -1546,11 +1539,12 @@ def q_multimodal_phash(spark: SparkSession, sf_dir: str) -> DataFrame:
     full = frames.groupBy("doc_id").agg(F.count(F.lit(1)).alias("nf")).filter(
         F.col("nf") == _PHASH_FRAMES
     )
-    key = (spark.sparkContext.applicationId, "phash_cos")
-    basis = _PHASH_COS_MEMO.get(key)
-    if basis is None:
-        basis = spark.createDataFrame(_PHASH_COS, "k int, n int, cq long")
-        _PHASH_COS_MEMO[key] = basis
+    # session memo of the constant 240-row DCT basis table (createDataFrame
+    # costs ~0.15 s of driver serialization per call; it never changes)
+    basis = CACHE.get_or_build(
+        spark, "phash_cos",
+        lambda: spark.createDataFrame(_PHASH_COS, "k int, n int, cq long"),
+    )
     coef = (
         frames.join(F.broadcast(full.select("doc_id")), "doc_id")
         .join(F.broadcast(basis), "n")

@@ -24,10 +24,10 @@ from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from genesapi_cli_spark.io import (
-    derived_memo_get_or_build,
-    derived_memo_key,
+    CACHE,
     load,
     spread,
+    source_stamps,
 )
 from genesapi_cli_spark.registry import DEC, register
 
@@ -89,18 +89,15 @@ def dot_lit_expr(a: str, coeffs: list[float]) -> Column:
     )
 
 
-#: Session-scoped memo of the normed embedding relation (vec_id, label,
-#: emb float64[], nrm), keyed by (application, sf_dir) — the similarity
-#: family's common scan prefix, materialized once per session by the first
-#: consumer's action (lazy localCheckpoint) and read as cached blocks by
-#: every later ANN/recall/rerank/maxsim query, the same pattern as
-#: graph.shared_copurchase_edges. At 100 TB this relation is the persisted
-#: "embedding table with norms" every vector pipeline materializes next to
-#: the index. Results are identical with or without the memo (same
-#: expressions, same values); the memo never crosses sessions or sf_dirs.
-_NORMED_MEMO: dict = {}
-
-
+# Session-scoped memo of the normed embedding relation (vec_id, label,
+# emb float64[], nrm), keyed by (application, sf_dir) — the similarity
+# family's common scan prefix, materialized once per session by the first
+# consumer's action (lazy localCheckpoint) and read as cached blocks by
+# every later ANN/recall/rerank/maxsim query, the same pattern as
+# graph.shared_copurchase_edges. At 100 TB this relation is the persisted
+# "embedding table with norms" every vector pipeline materializes next to
+# the index. Results are identical with or without the memo (same
+# expressions, same values); the memo never crosses sessions or sf_dirs.
 def build_normed_embeddings(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The UN-checkpointed normed-embeddings plan — separate from the
     memoizing wrapper so the plan-snapshot gate fingerprints the shared
@@ -118,9 +115,9 @@ def build_normed_embeddings(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def shared_normed_embeddings(spark: SparkSession, sf_dir: str) -> DataFrame:
-    key = derived_memo_key(spark, sf_dir, "embeddings")
-    return derived_memo_get_or_build(
-        _NORMED_MEMO, key, lambda: build_normed_embeddings(spark, sf_dir)
+    return CACHE.get_or_build(
+        spark, "normed_embeddings", lambda: build_normed_embeddings(spark, sf_dir), sf_dir,
+        source_stamps(sf_dir, "embeddings"), checkpoint=True,
     )
 
 
@@ -2186,13 +2183,10 @@ def _ham_sig_sql() -> str:
     return " + ".join(terms)
 
 
-#: Session memo of the signed relation (vec_id, emb, nrm, sg) — one Arrow
-#: matmul pass per (session, sf_dir), shared by the query and candidate
-#: branches (and any future radius/multi-index consumer). At 100 TB the
-#: signature is a persisted bigint column next to the vectors.
-_HAM_SIG_MEMO: dict = {}
-
-
+# Session memo of the signed relation (vec_id, emb, nrm, sg) — one Arrow
+# matmul pass per (session, sf_dir), shared by the query and candidate
+# branches (and any future radius/multi-index consumer). At 100 TB the
+# signature is a persisted bigint column next to the vectors.
 def _ham_sig_batches():
     """Arrow batch fn computing all {_HAM_N_PLANES} sign bits in ONE exact
     int64 matmul per batch — shared by the memoizing wrapper and the
@@ -2230,16 +2224,17 @@ def build_ham_signatures(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _shared_ham_signatures(spark: SparkSession, sf_dir: str) -> DataFrame:
-    key = derived_memo_key(spark, sf_dir, "embeddings")
-
-    def _build():
+    def build(spark: SparkSession, sf_dir: str) -> DataFrame:
         e = shared_normed_embeddings(spark, sf_dir)
         return e.select("vec_id", "emb", "nrm").mapInPandas(
             _ham_sig_batches(),
             "vec_id bigint, emb array<double>, nrm double, sg bigint",
         )
 
-    return derived_memo_get_or_build(_HAM_SIG_MEMO, key, _build)
+    return CACHE.get_or_build(
+        spark, "ham_signatures", lambda: build(spark, sf_dir), sf_dir,
+        source_stamps(sf_dir, "embeddings"), checkpoint=True,
+    )
 
 
 def _ham_oracle() -> str:
@@ -2307,7 +2302,7 @@ def q_sim_hamming(spark: SparkSession, sf_dir: str) -> DataFrame:
     arithmetic and the sign matches DuckDB with no fold-order dependence —
     replacing 16 per-row interpreted 64-term projection expressions
     (2.9 s → sub-second at sf0.1). The signed relation is session-memoized
-    (_HAM_SIG_MEMO), the persisted-signature-column analog at 100 TB.
+    (io.CACHE), the persisted-signature-column analog at 100 TB.
     """
     sig = _shared_ham_signatures(spark, sf_dir)
     q = sig.filter(F.col("vec_id") < 10).select(

@@ -26,10 +26,10 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from genesapi_cli_spark.io import (
-    derived_memo_get_or_build,
-    derived_memo_key,
+    CACHE,
     load,
     spread,
+    source_stamps,
 )
 from genesapi_cli_spark.registry import DEC, oracle_r4, r4, register
 
@@ -259,14 +259,11 @@ def near_minhash_oracle_ctes() -> str:
 _NEAR_MINHASH_ORACLE = f"WITH {near_minhash_oracle_ctes()}\nSELECT doc_a, doc_b FROM pairs"
 
 
-#: Session-scoped memo of the candidate-pair relation (same convention as
-#: graph.shared_copurchase_edges): q_dedup_clusters and q_dedup_keep both
-#: consume the exact pair relation this query emits, so the first consumer
-#: materializes it (lazy localCheckpoint) and the rest read cached blocks —
-#: the runtime analog of persisting the LSH pair table next to the corpus.
-_PAIRS_MEMO: dict = {}
-
-
+# Session-scoped memo of the candidate-pair relation (same convention as
+# graph.shared_copurchase_edges): q_dedup_clusters and q_dedup_keep both
+# consume the exact pair relation this query emits, so the first consumer
+# materializes it (lazy localCheckpoint) and the rest read cached blocks —
+# the runtime analog of persisting the LSH pair table next to the corpus.
 def build_minhash_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The UN-checkpointed MinHash-LSH pair plan — separate from the
     memoizing registry entry so the plan-snapshot gate fingerprints the
@@ -367,9 +364,9 @@ def q_dedup_near_minhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     pytest-pinned. Session-memoized: q_dedup_clusters and q_dedup_keep
     consume the same pair relation (the persisted-LSH-pair-table analog).
     """
-    key = derived_memo_key(spark, sf_dir, "documents")
-    return derived_memo_get_or_build(
-        _PAIRS_MEMO, key, lambda: build_minhash_pairs(spark, sf_dir)
+    return CACHE.get_or_build(
+        spark, "minhash_pairs", lambda: build_minhash_pairs(spark, sf_dir), sf_dir,
+        source_stamps(sf_dir, "documents"), checkpoint=True,
     )
 
 

@@ -21,9 +21,9 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from genesapi_cli_spark.io import (
-    derived_memo_get_or_build,
-    derived_memo_key,
+    CACHE,
     load,
+    source_stamps,
 )
 from genesapi_cli_spark.registry import DEC, dec_sum, oracle_dec_sum, register
 
@@ -4744,21 +4744,14 @@ def q_window_matrix_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 _PGRAM_PERIODS = (7, 30)
 
-#: Session memo of the constant ≤37-row trig table (createDataFrame costs
-#: ~0.15 s of driver serialization per call; the table never changes).
-_PGRAM_TRIG_MEMO: dict = {}
-
-#: Session memo of the family's common prefix — the daily revenue series
-#: (event_type, day_idx, cents = Σ floor(value·100+0.5)) — consumed by ten
-#: window/timeseries queries (hampel, mann_kendall, snaive, conformal, sax,
-#: hurst, matrix_profile, periodogram, slope, beta). One events scan + one
-#: hash aggregate per (session, sf_dir) instead of one per query; at 100 TB
-#: this relation is precisely the persisted daily-rollup table a metrics
-#: pipeline materializes ahead of its analytics. Results are identical with
-#: or without the memo (same expressions, same values).
-_DAILY_CENTS_MEMO: dict = {}
-
-
+# Session memo of the family's common prefix — the daily revenue series
+# (event_type, day_idx, cents = Σ floor(value·100+0.5)) — consumed by ten
+# window/timeseries queries (hampel, mann_kendall, snaive, conformal, sax,
+# hurst, matrix_profile, periodogram, slope, beta). One events scan + one
+# hash aggregate per (session, sf_dir) instead of one per query; at 100 TB
+# this relation is precisely the persisted daily-rollup table a metrics
+# pipeline materializes ahead of its analytics. Results are identical with
+# or without the memo (same expressions, same values).
 def build_daily_cents(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The UN-checkpointed daily-rollup plan — separate from the memoizing
     wrapper so the plan-snapshot gate fingerprints the shared subtree."""
@@ -4775,9 +4768,9 @@ def build_daily_cents(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def shared_daily_cents(spark: SparkSession, sf_dir: str) -> DataFrame:
-    key = derived_memo_key(spark, sf_dir, "events")
-    return derived_memo_get_or_build(
-        _DAILY_CENTS_MEMO, key, lambda: build_daily_cents(spark, sf_dir)
+    return CACHE.get_or_build(
+        spark, "daily_cents", lambda: build_daily_cents(spark, sf_dir), sf_dir,
+        source_stamps(sf_dir, "events"), checkpoint=True,
     )
 
 
@@ -4879,18 +4872,15 @@ def q_window_periodogram(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.count(F.lit(1)).over(wp).cast("bigint").alias("n"),
         F.sum("cents").over(wp).cast("bigint").alias("s1"),
     )
-    key = (spark.sparkContext.applicationId, "pgram_trig")
-    trig = _PGRAM_TRIG_MEMO.get(key)
-    if trig is None:
-        trig_rows = [
-            (p, ph, c, s)
-            for p in _PGRAM_PERIODS
-            for (ph, c, s) in _pgram_trig_rows(p)
-        ]
-        trig = spark.createDataFrame(
-            trig_rows, "period int, phase int, c_micro long, s_micro long"
-        )
-        _PGRAM_TRIG_MEMO[key] = trig
+    # session memo of the constant ≤37-row trig table (createDataFrame costs
+    # ~0.15 s of driver serialization per call; it never changes)
+    trig = CACHE.get_or_build(
+        spark, "pgram_trig",
+        lambda: spark.createDataFrame(
+            [(p, ph, c, s) for p in _PGRAM_PERIODS for (ph, c, s) in _pgram_trig_rows(p)],
+            "period int, phase int, c_micro long, s_micro long",
+        ),
+    )
     proj = (
         seq.join(
             F.broadcast(trig),

@@ -42,17 +42,15 @@ RUNTIME_CONFS: dict[str, str] = {
     # still guards against runaway recursion at 100M.
     "spark.sql.cteRecursionRowLimit": str(100_000_000),
     # Leaf-node parallelism is NOT a static conf here: io.load derives
-    # spark.sql.leafNodeDefaultParallelism FROM LAKE SIZE per sf_dir
-    # (clamp(bytes / 32 MiB, 1, defaultParallelism) — scale-adaptive, equal
-    # to the stock default once the lake carries ≥ 32 MiB per core; see
-    # io._LEAF_PART_BYTES for the round-13 floor measurements). Override via
-    # SPARK_GRAFT_LEAF_PAR.
+    # spark.sql.leafNodeDefaultParallelism from lake size per sf_dir (see
+    # io._ensure_scale_partitions). Override via SPARK_GRAFT_LEAF_PAR.
 }
 
 
-def ensure_runtime_confs(spark: SparkSession) -> SparkSession:
-    """Idempotently apply required runtime confs to an existing session."""
-    for k, v in RUNTIME_CONFS.items():
+def apply_confs(spark: SparkSession, confs: dict[str, str]) -> SparkSession:
+    """Set each conf whose session value differs (get-compare-set), so a
+    value changed behind the engine's back is restored on the next call."""
+    for k, v in confs.items():
         try:
             if spark.conf.get(k, None) != v:
                 spark.conf.set(k, v)
@@ -60,6 +58,11 @@ def ensure_runtime_confs(spark: SparkSession) -> SparkSession:
             # Static confs on an exotic session: proceed, reads may still work.
             pass
     return spark
+
+
+def ensure_runtime_confs(spark: SparkSession) -> SparkSession:
+    """Idempotently apply required runtime confs to an existing session."""
+    return apply_confs(spark, RUNTIME_CONFS)
 
 
 def build_session(

@@ -31,9 +31,8 @@ sys.path.insert(0, HERE)
 
 import genesapi_cli_spark  # noqa: E402
 from genesapi_cli_spark.registry import REGISTRY  # noqa: E402
-from genesapi_cli_spark.session import build_session  # noqa: E402
 
-from scripts.opt_measure import materialize, warmup  # noqa: E402
+from bench import build_bench_session, materialize, warmup  # noqa: E402
 
 
 def main() -> int:
@@ -44,10 +43,7 @@ def main() -> int:
 
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     genesapi_cli_spark.load_all()
-    spark = build_session(
-        app_name="genesapi-floor-probe",
-        shuffle_partitions=int(os.environ.get("SPARK_GRAFT_SHUFFLE", "3")),
-    )
+    spark = build_bench_session("genesapi-floor-probe")
     warmup(spark, sf_dir)
     sc = spark.sparkContext
     tracker = sc.statusTracker()

@@ -27,40 +27,8 @@ sys.path.insert(0, HERE)
 
 import genesapi_cli_spark  # noqa: E402
 from genesapi_cli_spark.registry import REGISTRY  # noqa: E402
-from genesapi_cli_spark.session import build_session  # noqa: E402
 
-from pyspark.sql import functions as F  # noqa: E402
-
-
-def materialize(df) -> None:
-    df.write.format("noop").mode("overwrite").save()
-
-
-def warmup(spark, sf_dir) -> None:
-    materialize(spark.range(1000).selectExpr("sum(id) AS s"))
-    materialize(spark.createDataFrame([(1, "w")], "a int, b string"))
-    spark.read.parquet(f"{sf_dir}/region.parquet").count()
-    warm = spark.range(256).selectExpr(
-        "id", "id % 7 AS k", "sha2(cast(id AS string), 256) AS s", "xxhash64(id) AS h"
-    )
-    materialize(
-        warm.selectExpr(
-            "k",
-            "sum(id) OVER (PARTITION BY k ORDER BY id) AS rs",
-            "row_number() OVER (PARTITION BY k ORDER BY id) AS rn",
-        )
-    )
-    materialize(
-        warm.groupBy("k").agg(F.sort_array(F.collect_list("id")).alias("xs"))
-        .select("k", F.explode("xs").alias("x"))
-    )
-    materialize(warm.join(F.broadcast(warm.select("k").distinct()), "k"))
-
-    def _warm_pandas(it):
-        for pdf in it:
-            yield pdf
-
-    materialize(warm.select("k", "id").mapInPandas(_warm_pandas, schema="k long, id long"))
+from bench import build_bench_session, materialize, warmup  # noqa: E402
 
 
 def main() -> int:
@@ -73,10 +41,7 @@ def main() -> int:
 
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     genesapi_cli_spark.load_all()
-    spark = build_session(
-        app_name="genesapi-opt-measure",
-        shuffle_partitions=int(os.environ.get("SPARK_GRAFT_SHUFFLE", "3")),
-    )
+    spark = build_bench_session("genesapi-opt-measure")
     warmup(spark, sf_dir)
 
     out = {}

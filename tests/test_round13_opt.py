@@ -4,10 +4,7 @@ rules — one test per changed internal)."""
 
 from __future__ import annotations
 
-import os
-
 import genesapi_cli_spark.io as gio
-from genesapi_cli_spark.io import derived_memo_get_or_build
 
 from tests.conftest import ORACLE_SF_DIR, SMOKE_SF_DIR
 
@@ -18,13 +15,11 @@ def test_leaf_parallelism_derived_from_lake_size(spark, monkeypatch):
     clamped at defaultParallelism for a lake carrying >= 32 MiB per core
     (identical to the stock default there), env-overridable."""
     dp = spark.sparkContext.defaultParallelism
-    app = spark.sparkContext.applicationId
     conf = "spark.sql.leafNodeDefaultParallelism"
 
     def run(total_bytes, sf_dir):
         monkeypatch.setattr(gio, "_lake_bytes", lambda s, d: total_bytes)
-        gio._PART_MEMO.clear()
-        gio._PART_APPLIED.pop(app, None)
+        gio.CACHE.clear()
         gio._ensure_scale_partitions(spark, sf_dir)
         return int(spark.conf.get(conf))
 
@@ -42,36 +37,40 @@ def test_leaf_parallelism_derived_from_lake_size(spark, monkeypatch):
         # re-derive from the real lake (real _lake_bytes, real env) so the
         # shared session does not carry the override into later tests
         monkeypatch.undo()
-        gio._PART_MEMO.clear()
-        gio._PART_APPLIED.pop(app, None)
+        gio.CACHE.clear()
         gio._ensure_scale_partitions(spark, ORACLE_SF_DIR)
 
 
 def test_no_memo_knob_disables_cross_invocation_sharing(spark, monkeypatch):
-    """SPARK_GRAFT_NO_MEMO=1 must route every derived_memo_get_or_build call
-    to a fresh build (no memo population, no reuse), while the default path
-    still serves one shared object. This is the round-13 de-shadowing knob
-    the bench runs once each way to quantify the session memos."""
+    """SPARK_GRAFT_NO_MEMO=1 must route every derived-relation get_or_build
+    call to a fresh build (no cache population, no reuse), while the default
+    path still serves one shared object. This is the round-13 de-shadowing
+    knob the bench runs once each way to quantify the session memos."""
     calls = {"n": 0}
 
     def build():
         calls["n"] += 1
         return spark.range(3).toDF("x")
 
-    memo: dict = {}
-    key = ("app", SMOKE_SF_DIR, ("stamp",))
+    gio.CACHE.clear()
+    key = ("no_memo_probe", SMOKE_SF_DIR)
+
+    def get():
+        return gio.CACHE.get_or_build(
+            spark, "no_memo_probe", build, SMOKE_SF_DIR, ("stamp",), checkpoint=True
+        )
 
     monkeypatch.setenv("SPARK_GRAFT_NO_MEMO", "1")
-    a = derived_memo_get_or_build(memo, key, build)
-    b = derived_memo_get_or_build(memo, key, build)
+    a = get()
+    b = get()
     assert calls["n"] == 2, "no-memo mode must rebuild per call"
-    assert not memo, "no-memo mode must not populate the memo"
+    assert not gio.CACHE.entries, "no-memo mode must not populate the cache"
     assert a is not b
     assert sorted(r.x for r in a.collect()) == sorted(r.x for r in b.collect())
 
     monkeypatch.delenv("SPARK_GRAFT_NO_MEMO")
-    c = derived_memo_get_or_build(memo, key, build)
-    d = derived_memo_get_or_build(memo, key, build)
+    c = get()
+    d = get()
     assert calls["n"] == 3, "memo mode must build once"
     assert c is d
-    assert key in memo
+    assert key in gio.CACHE.entries

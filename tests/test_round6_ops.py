@@ -89,10 +89,10 @@ def test_shared_framing_and_load_memos_return_same_object(spark):
 
 
 def test_spread_caches_partition_probe(spark):
-    """spread() must stamp the probed partition count on the memoized
-    DataFrame so later spreads skip the plan→RDD conversion."""
-    from genesapi_cli_spark.io import load, spread
+    """spread() must keep the probed partition count with the cached load
+    so later spreads skip the plan→RDD conversion."""
+    from genesapi_cli_spark.io import CACHE, load, spread
 
     df = load(spark, SMOKE_SF_DIR, "orders")
     spread(df)
-    assert isinstance(getattr(df, "_graft_nparts", None), int)
+    assert isinstance(CACHE.entries[("load:orders", SMOKE_SF_DIR)].nparts, int)
